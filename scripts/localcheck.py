@@ -34,6 +34,11 @@ def main():
     oracle = json.loads(Path(f"{OUT_DIR}/oracle_sql.json").read_text())
     results = {}
     for name in sorted(p.name for p in Path(OUT_DIR).iterdir() if p.is_dir()):
+        # a failed write leaves a directory with no parquet file: fail
+        # that row and keep checking the others
+        if not any(Path(OUT_DIR, name).glob("*.parquet")):
+            results[name] = "NO_OUTPUT"
+            continue
         got = con.execute(
             f"SELECT * FROM read_parquet('{OUT_DIR}/{name}/*.parquet')").fetch_arrow_table()
         got_cols = sorted(got.column_names)

@@ -45,6 +45,8 @@ object TextSearch {
     val st = Par.labeled(docs.sparkSession, "bm25: corpus stats")(
       docToks.agg(count(lit(1)).as("n_docs"), avg("len").as("avgdl")).head())
     val nDocs = st.getLong(0)
+    // an empty corpus has no avg(len) (NULL) and scores no document
+    if (nDocs == 0) return docToks.select(col(idCol), lit(0.0).as("score"))
     val avgdl = st.getDouble(1)
     // per-term tf computed MAP-SIDE from the token array (queryTerms is
     // a literal handful, so |terms| array scans per doc): no explode of

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Associations, EditDistanceJoin, TextSearch}
 
 /** Edit-distance join (SymSpell blocking), market-basket co-occurrence,
-  * and TF-IDF keyword extraction semantics.
+  * TF-IDF keyword extraction and BM25 scoring semantics.
   */
 class MiningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -133,5 +133,14 @@ class MiningSpec extends AnyFunSuite {
       (1L, 1, "apple"), (1L, 2, "banana"),
       (2L, 1, "banana"), (2L, 2, "common"),
       (3L, 1, "cherry"), (3L, 2, "common")))
+  }
+
+  // ---- BM25 ----
+
+  test("bm25 over an empty corpus returns an empty (id, score) frame") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val got = TextSearch.bm25(empty, "doc_id", "text", Seq("spark"))
+    assert(got.columns.toSeq == Seq("doc_id", "score"))
+    assert(got.collect().isEmpty)
   }
 }
